@@ -82,28 +82,50 @@ object Graft {
                 : org.apache.spark.sql.Dataset[graft.operators.VolumeZoom.ZSlice] =
     graft.operators.VolumeZoom(slices, dims, scale, order)(slices.sparkSession)
 
-  /** Distributed 3-D connected-components over tiled boolean volumes — the
-    * cluster path for the reference's `label` on volumes too large for one
-    * row (/root/reference/imops/measure.py:33-137). `connectivity` 1..3
-    * maps to cc3d 6/18/26 like the reference; cross-tile merge shuffles
-    * O(surface), never O(volume). Returns (global flat index, label) with
-    * the kernel's scan-order label numbering. */
+  /** 3-D connected components over one tiled boolean volume — the
+    * reference's `label` (imops/measure.py:33-137 in the reference) on
+    * volumes stored as tiles. `connectivity` 1..3 maps to cc3d 6/18/26
+    * like the reference. Returns (global flat index `g`, `label`) for every
+    * true cell, with the kernel's scan-order label numbering.
+    *
+    * Routed by size, like `TiledStencil.apply3Auto`:
+    *  - at most `TiledStencil.LabelCutoffCells` cells (2^25 B per task
+    *    over 14 B per cell, about 133³): `DistributedLabel.apply3Assembled`,
+    *    one groupByKey that labels the whole volume in one kernel task. The
+    *    frame is lazy: every action re-runs that task, and it persists
+    *    nothing. The task throws unless the tiles are one complete volume
+    *    (a single `id`, every grid coordinate once).
+    *  - larger: `DistributedLabel.apply3`, the two-level scheme whose
+    *    cross-tile merge shuffles O(surface), never O(volume). It runs
+    *    eagerly here and returns a local checkpoint.
+    * Both return the same rows, and on neither path need the caller
+    * unpersist anything: no result enters the CacheManager. */
   def labelVolume(tiles: org.apache.spark.sql.Dataset[graft.operators.TiledStencil.Tile3],
                   tileSize: Int, grid: Array[Int], connectivity: Int = 1)
-                 : org.apache.spark.sql.DataFrame =
-    graft.operators.DistributedLabel.apply3(tiles, tileSize, grid, connectivity)(
-      tiles.sparkSession)
+                 : org.apache.spark.sql.DataFrame = {
+    implicit val spark: SparkSession = tiles.sparkSession
+    val cells = grid.map(_.toLong).product * tileSize.toLong * tileSize * tileSize
+    if (cells <= graft.operators.TiledStencil.LabelCutoffCells)
+      graft.operators.DistributedLabel.apply3Assembled(tiles, tileSize, grid, connectivity)
+    else graft.operators.DistributedLabel.apply3(tiles, tileSize, grid, connectivity)
+  }
 
-  /** 2-D counterpart of [[labelVolume]]: distributed connected components
-    * over tiled boolean masks. `connectivity` 1 (cross, skimage conn-1) or
-    * 2 (8-adjacency); conn-1 merges tiles with the cheaper face-key
-    * equi-join, conn-2 with the shell-probe exchange (corner cells of four
-    * tiles can meet diagonally). Shuffle O(perimeter), never O(area). */
+  /** 2-D counterpart of [[labelVolume]] over one tiled boolean mask, with
+    * the same size route and the same lazy/eager split. `connectivity` 1
+    * (cross, skimage conn-1) or 2 (8-adjacency). Above the bound,
+    * `DistributedLabel.apply` merges tiles with the cheaper face-key
+    * equi-join at conn-1 and the shell-probe exchange at conn-2 (corner
+    * cells of four tiles can meet diagonally): shuffle O(perimeter), never
+    * O(area). */
   def labelImage(tiles: org.apache.spark.sql.Dataset[graft.operators.TiledStencil.Tile],
                  tileSize: Int, gridRows: Int, gridCols: Int, connectivity: Int = 1)
-                : org.apache.spark.sql.DataFrame =
-    graft.operators.DistributedLabel(tiles, tileSize, gridRows, gridCols, connectivity)(
-      tiles.sparkSession)
+                : org.apache.spark.sql.DataFrame = {
+    implicit val spark: SparkSession = tiles.sparkSession
+    val cells = gridRows.toLong * gridCols * tileSize * tileSize
+    if (cells <= graft.operators.TiledStencil.LabelCutoffCells)
+      graft.operators.DistributedLabel.applyAssembled(tiles, tileSize, gridRows, gridCols, connectivity)
+    else graft.operators.DistributedLabel(tiles, tileSize, gridRows, gridCols, connectivity)
+  }
 
   // object-storage mirrors for cached volume inputs, keyed by the input
   // plan's semantic hash: Spark's in-memory columnar cache re-materializes
@@ -550,7 +572,10 @@ object Graft {
   /** Per-vertex triangle counts over an undirected edge list — community /
     * spam-density signal for graph-shaped curation (link graphs, citation
     * graphs, the co-activity graph the PageRank facade consumes). See
-    * operators.TriangleCount for the degree-ordered O(m^1.5) bound. */
+    * operators.TriangleCount for the degree-ordered O(m^1.5) bound.
+    * Eager: the counts are computed here and returned as a local
+    * checkpoint. Nothing enters the CacheManager, and the checkpoint's
+    * blocks go with the frame, so callers need not unpersist. */
   def triangleCounts(edges: org.apache.spark.sql.DataFrame, srcCol: String,
                      dstCol: String): org.apache.spark.sql.DataFrame =
     graft.operators.TriangleCount(edges, srcCol, dstCol)

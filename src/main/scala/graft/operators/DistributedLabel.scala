@@ -29,9 +29,15 @@ import graft.operators.TiledStencil.Tile
   * and border/shell rows emit from a single kernel pass into one cached
   * tagged frame (the r11 shape ran the union-find kernel and the tile
   * source scan twice per query, once for pixels and once for borders).
-  * The result materializes eagerly and every intermediate cache is
-  * released before returning (the TriangleCount/GraphCC release policy);
-  * only the O(true pixels) result frame stays cached while referenced.
+  * The result materializes eagerly as a local checkpoint and every
+  * intermediate cache is released before returning (the
+  * TriangleCount/GraphCC release policy). Nothing stays in the
+  * CacheManager: the O(true pixels) checkpoint blocks live only while the
+  * returned frame is reachable, so callers need not unpersist.
+  *
+  * `applyAssembled`/`apply3Assembled` are the single-task route for inputs
+  * within `TiledStencil.LabelCutoffCells`: one exchange gathers the tiles,
+  * the kernel labels the whole mask once, and the frame stays lazy.
   */
 object DistributedLabel {
 
@@ -65,11 +71,14 @@ object DistributedLabel {
     val roots = labels.values.distinct(spark.sparkContext.defaultParallelism)
       .sortBy(identity).zipWithIndex()
       .map { case (lbl, idx) => (lbl, idx + 1) }
+    // eager local checkpoint, not persist: a persisted frame stays in the
+    // CacheManager (and on the heap) for the session, a checkpoint's
+    // blocks go when the frame is collected; lost blocks are not
+    // recomputed, the trade-off GraphCC's rounds already accept
     val res = localized.join(labels.toDF("rep", "lbl"), Seq("rep"))
       .join(roots.toDF("lbl", "label"), Seq("lbl"))
       .select(col("g"), col("label").cast("long").as("label"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    res.count()
+      .localCheckpoint()
     labels.unpersist(blocking = false)
     res
   }
@@ -105,15 +114,14 @@ object DistributedLabel {
 
     // ONE kernel pass per tile: pixel rows + (face-key or shell) rows
     val emitted: Dataset[Emit] = tiles.flatMap { t =>
-      val data = t.data.map(b => if (b) 1.0 else 0.0)
-      val res = LabelKernel.label(data, Array(ts, ts), connectivity = connectivity)
-      val rep = scala.collection.mutable.Map.empty[Long, Long]
+      val res = LabelKernel.label(t.data, Array(ts, ts), connectivity)
+      val rep = Array.fill(res.num + 1)(Long.MaxValue)
       var i = 0
       while (i < ts * ts) {
-        val lb = res.labels(i)
+        val lb = res.labels(i).toInt
         if (lb != 0) {
           val g = (t.ti.toLong * ts + i / ts) * cols + (t.tj.toLong * ts + i % ts)
-          rep(lb) = rep.get(lb).map(math.min(_, g)).getOrElse(g)
+          rep(lb) = math.min(rep(lb), g)
         }
         i += 1
       }
@@ -122,11 +130,11 @@ object DistributedLabel {
         if (lb == 0) None
         else {
           val g = (t.ti.toLong * ts + i / ts) * cols + (t.tj.toLong * ts + i % ts)
-          Some((0, g, 0L, 0L, rep(lb)): Emit)
+          Some((0, g, 0L, 0L, rep(lb.toInt)): Emit)
         }
       }
       def repAt(i: Int, j: Int): Option[Long] = {
-        val lb = res.labels(i * ts + j)
+        val lb = res.labels(i * ts + j).toInt
         if (lb == 0) None else Some(rep(lb))
       }
       val border: Iterator[Emit] =
@@ -154,7 +162,7 @@ object DistributedLabel {
           (for {
             i <- (0 until ts).iterator; j <- (0 until ts).iterator
             if i == 0 || i == ts - 1 || j == 0 || j == ts - 1
-            lb = res.labels(i * ts + j) if lb != 0
+            lb = res.labels(i * ts + j).toInt if lb != 0
           } yield ((1, t.ti.toLong * ts + i, t.tj.toLong * ts + j, 0L, rep(lb)): Emit))
         }
       px ++ border
@@ -211,16 +219,15 @@ object DistributedLabel {
     val (d1, d2) = (grid(1) * ts, grid(2) * ts)
 
     val emitted: Dataset[Emit] = tiles.flatMap { t =>
-      val res = graft.kernels.LabelKernel.label(
-        t.data.map(b => if (b) 1.0 else 0.0), Array(ts, ts, ts), connectivity = connectivity)
-      val rep = scala.collection.mutable.Map.empty[Long, Long]
+      val res = LabelKernel.label(t.data, Array(ts, ts, ts), connectivity)
+      val rep = Array.fill(res.num + 1)(Long.MaxValue)
       var f = 0
       while (f < ts * ts * ts) {
-        val lb = res.labels(f)
+        val lb = res.labels(f).toInt
         if (lb != 0) {
           val (i, j, k) = (f / (ts * ts), (f / ts) % ts, f % ts)
           val g = ((t.ti.toLong * ts + i) * d1 + (t.tj.toLong * ts + j)) * d2 + (t.tk.toLong * ts + k)
-          rep(lb) = rep.get(lb).map(math.min(_, g)).getOrElse(g)
+          rep(lb) = math.min(rep(lb), g)
         }
         f += 1
       }
@@ -230,11 +237,11 @@ object DistributedLabel {
         else {
           val (i, j, k) = (f / (ts * ts), (f / ts) % ts, f % ts)
           val g = ((t.ti.toLong * ts + i) * d1 + (t.tj.toLong * ts + j)) * d2 + (t.tk.toLong * ts + k)
-          Some((0, g, 0L, 0L, rep(lb)): Emit)
+          Some((0, g, 0L, 0L, rep(lb.toInt)): Emit)
         }
       }
       def repAt(i: Int, j: Int, k: Int): Option[Long] = {
-        val lb = res.labels((i * ts + j) * ts + k)
+        val lb = res.labels((i * ts + j) * ts + k).toInt
         if (lb == 0) None else Some(rep(lb))
       }
       val border: Iterator[Emit] =
@@ -263,7 +270,7 @@ object DistributedLabel {
           (for {
             i <- (0 until ts).iterator; j <- (0 until ts).iterator; k <- (0 until ts).iterator
             if i == 0 || i == ts - 1 || j == 0 || j == ts - 1 || k == 0 || k == ts - 1
-            lb = res.labels((i * ts + j) * ts + k) if lb != 0
+            lb = res.labels((i * ts + j) * ts + k).toInt if lb != 0
           } yield ((1, t.ti.toLong * ts + i, t.tj.toLong * ts + j, t.tk.toLong * ts + k, rep(lb)): Emit))
         }
       px ++ border
@@ -307,5 +314,66 @@ object DistributedLabel {
       }
 
     run(emitted, edgesOf)
+  }
+
+  // ---------- single-task route (sub-cutoff inputs) ----------
+
+  /** `apply` for images within [[TiledStencil.LabelCutoffCells]]: one
+    * groupByKey gathers every tile into one task, which checks that they
+    * form one whole image, untiles it and runs the kernel once. Same rows
+    * as `apply`; the frame is lazy and persists nothing. An empty tile set
+    * reaches no task and yields no rows, as on the distributed path. */
+  def applyAssembled(tiles: Dataset[Tile], ts: Int, gridRows: Int, gridCols: Int,
+                     connectivity: Int = 1)
+                    (implicit spark: SparkSession): DataFrame =
+    assembled(tiles, ts, Array(gridRows, gridCols), connectivity)(
+      t => (t.id, Array(t.ti, t.tj), t.data.length))(
+      TiledStencil.untile(_, gridRows * ts, gridCols * ts, ts))
+
+  /** `apply3` for volumes within [[TiledStencil.LabelCutoffCells]], the
+    * same single-task route as [[applyAssembled]]. */
+  def apply3Assembled(tiles: Dataset[Tile3], ts: Int, grid: Array[Int], connectivity: Int = 1)
+                     (implicit spark: SparkSession): DataFrame =
+    assembled(tiles, ts, grid, connectivity)(
+      t => (t.id, Array(t.ti, t.tj, t.tk), t.data.length))(
+      TiledStencil.untile3(_, grid.map(_ * ts), ts))
+
+  /** The route over either tile type: `place` gives a tile's (id, grid
+    * coordinate, cell count) for the input check, `untile` the whole mask. */
+  private def assembled[T](tiles: Dataset[T], ts: Int, grid: Array[Int], connectivity: Int)
+                          (place: T => (Long, Array[Int], Int))
+                          (untile: Seq[T] => Array[Boolean])
+                          (implicit spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    val dims = grid.map(_ * ts)
+    tiles.groupByKey(_ => 0).flatMapGroups { (_: Int, it: Iterator[T]) =>
+      val all = it.toSeq
+      requireOneVolume(all.map(place), grid, Array.fill(grid.length)(ts).product)
+      val labels = LabelKernel.label(untile(all), dims, connectivity).labels
+      Iterator.range(0, labels.length).filter(labels(_) != 0L).map(g => (g.toLong, labels(g)))
+    }.toDF("g", "label")
+  }
+
+  /** Throws unless the tiles, given as (id, grid coordinate, cell count),
+    * are one volume: a single id, `tileCells` cells each, and every
+    * coordinate of `grid` present exactly once. The distributed path
+    * would merge such input silently. */
+  private def requireOneVolume(tiles: Seq[(Long, Array[Int], Int)], grid: Array[Int],
+                               tileCells: Int): Unit = {
+    val ids = tiles.map(_._1).distinct
+    require(ids.size == 1,
+      s"label: tiles of ${ids.size} volume ids (${ids.take(4).mkString(", ")}); one call labels one volume")
+    val seen = new Array[Boolean](grid.product)
+    tiles.foreach { case (_, at, cells) =>
+      val where = at.mkString("(", ", ", ")")
+      require(at.indices.forall(d => at(d) >= 0 && at(d) < grid(d)),
+        s"label: tile $where lies outside the ${grid.mkString("x")} grid")
+      require(cells == tileCells, s"label: tile $where holds $cells cells, not $tileCells")
+      val f = at.indices.foldLeft(0)((acc, d) => acc * grid(d) + at(d))
+      require(!seen(f), s"label: tile $where appears twice")
+      seen(f) = true
+    }
+    require(tiles.size == seen.length,
+      s"label: ${seen.length - tiles.size} of the ${seen.length} grid tiles are missing")
   }
 }

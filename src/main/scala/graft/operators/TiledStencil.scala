@@ -207,11 +207,26 @@ object TiledStencil {
     apply3(tiles, ts, grid, fp, fs, isDilation = true)
   }
 
+  /** Per-task byte budget of the assembled paths, which rebuild one whole
+    * volume in a single task: 2^25 B = 32 MiB, comfortably one task's heap
+    * at any executor size ≥ 1 GiB. Both size bounds below derive from it. */
+  val AssembledTaskBytes: Long = 1L << 25
+
   /** Volumes small enough that halo bookkeeping dominates: cells per
     * volume at or under this bound take the assembled path in the `auto`
-    * router. 2^25 booleans = 32 MiB per assembled volume + one padded
-    * copy — comfortably one task's heap at any executor size ≥ 1 GiB. */
-  val AssembleCutoffCells: Long = 1L << 25
+    * router. It counts 1 B per cell, the assembled Boolean volume; the
+    * kernel's padded copy and the re-tiled output ride on the headroom
+    * below 1 GiB. 2^25 cells. */
+  val AssembleCutoffCells: Long = AssembledTaskBytes
+
+  /** Volumes (or images) at or under this many cells take the single-task
+    * route of `Graft.labelVolume`/`labelImage`
+    * (`DistributedLabel.apply3Assembled`/`applyAssembled`). That task holds
+    * every per-cell array for its whole run: the grouped tiles and the
+    * untiled mask (1 B each) plus `LabelKernel.WorkBytesPerCell` (4 B
+    * union-find parent + 8 B label), 14 B per cell. 2^25 / 14 = 2,396,745
+    * cells, about 133³ or 1548². */
+  val LabelCutoffCells: Long = AssembledTaskBytes / (2 + graft.kernels.LabelKernel.WorkBytesPerCell)
 
   /** Assembled per-volume path: ONE groupByKey on the volume id, the full
     * volume rebuilt in a single task, the single-tensor kernel run once,

@@ -72,12 +72,13 @@ object TriangleCount {
     // materialize the (small, O(triangle-vertices)) result so the two
     // edge-scale persists can be released HERE instead of leaking for the
     // session lifetime (r11 verdict item 4 — GraphCC's explicit-release
-    // policy): repeated triangleCount calls no longer accumulate cached
-    // edge lists; only the result frame stays cached while referenced.
+    // policy). An eager local checkpoint, not a persist: nothing enters the
+    // CacheManager, and the result's blocks go once the returned frame is
+    // no longer referenced, so repeated calls accumulate nothing and
+    // callers need not unpersist.
     val res = tri.select(explode(array(col("p"), col("v"), col("w"))).as("u"))
       .groupBy("u").agg(count(lit(1)).as("n_tri"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    res.count()
+      .localCheckpoint()
     und.unpersist(blocking = false)
     o.unpersist(blocking = false)
     res

@@ -239,10 +239,11 @@ class DistributedLabelSpec extends AnyFunSuite {
   test("intermediate caches are released; only the result frame stays persisted") {
     // r12 release policy: repeated labeling must not accumulate cached
     // RDDs for the session lifetime (the r11 shape leaked the pixel frame
-    // and, at conn >= 2, the shell frame per call). The result itself is
-    // persisted by contract (it materializes eagerly) — so after N calls
-    // exactly N result-backing entries may remain, which callers release
-    // by unpersisting the returned frame.
+    // and, at conn >= 2, the shell frame per call). The result materializes
+    // eagerly as a local checkpoint, whose RDD stays registered only while
+    // the returned frame is referenced — so after N calls at most N
+    // result-backing entries may remain. Nothing enters the CacheManager;
+    // the unpersist calls below are no-ops kept from the persist era.
     val rng = new scala.util.Random(3)
     val (rows, cols, ts) = (32, 32, 16)
     val mask = Array.fill(rows * cols)(rng.nextInt(3) > 0)
@@ -258,6 +259,119 @@ class DistributedLabelSpec extends AnyFunSuite {
         s"but $before -> $after persisted RDDs")
     res1.unpersist(blocking = true)
     res2.unpersist(blocking = true)
+  }
+}
+
+class LabelRouteSpec extends AnyFunSuite {
+  private implicit val spark: org.apache.spark.sql.SparkSession = SharedSpark.spark
+  import spark.implicits._
+  import graft.api.Graft
+  import graft.operators.TiledStencil.Tile3
+
+  private def pairs(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  private def kernelPairs(mask: Array[Boolean], shape: Array[Int], conn: Int): Map[Long, Long] =
+    LabelKernel.label(mask.map(b => if (b) 1.0 else 0.0), shape, connectivity = conn)
+      .labels.zipWithIndex.collect { case (lb, i) if lb != 0 => i.toLong -> lb }.toMap
+
+  // a non-cubic grid, so a swapped axis cannot pass; conn 1 on a dense mask,
+  // conn 2-3 on a sparse one, where edge/corner contacts across tile faces
+  // decide components
+  private val (dims, ts) = (Array(16, 24, 8), 8)
+  private val grid = dims.map(_ / ts)
+  private def volume(conn: Int): Array[Boolean] = {
+    val rng = new scala.util.Random(40 + conn)
+    Array.fill(dims.product)(if (conn == 1) rng.nextInt(3) > 0 else rng.nextInt(5) == 0)
+  }
+
+  test("routed labelVolume equals the kernel and DistributedLabel.apply3 at connectivity 1-3") {
+    for (conn <- 1 to 3) {
+      val tiles = TiledStencil.tile3(volume(conn), dims, ts).toDS()
+      val routed = Graft.labelVolume(tiles, ts, grid, conn)
+      val dist = DistributedLabel.apply3(tiles, ts, grid, conn)
+      assert(routed.schema == dist.schema)
+      val want = kernelPairs(volume(conn), dims, conn)
+      assert(want.values.toSet.size > 1, s"connectivity $conn: a single component discriminates nothing")
+      assert(pairs(routed) == want, s"connectivity $conn: routed != kernel")
+      assert(pairs(dist) == want, s"connectivity $conn: distributed != kernel")
+    }
+  }
+
+  test("routed labelImage equals the kernel and DistributedLabel.apply at connectivity 1-2") {
+    val (rows, cols, ts2) = (32, 48, 16)
+    for (conn <- 1 to 2) {
+      val rng = new scala.util.Random(60 + conn)
+      val mask = Array.fill(rows * cols)(if (conn == 1) rng.nextInt(3) > 0 else rng.nextInt(4) == 0)
+      val tiles = TiledStencil.tile(mask, rows, cols, ts2).toDS()
+      val routed = Graft.labelImage(tiles, ts2, rows / ts2, cols / ts2, conn)
+      val dist = DistributedLabel(tiles, ts2, rows / ts2, cols / ts2, conn)
+      assert(routed.schema == dist.schema)
+      val want = kernelPairs(mask, Array(rows, cols), conn)
+      assert(pairs(routed) == want, s"connectivity $conn: routed != kernel")
+      assert(pairs(dist) == want, s"connectivity $conn: distributed != kernel")
+    }
+  }
+
+  test("a routed call is lazy and runs at most 2 jobs; the distributed path runs more") {
+    val sc = spark.sparkContext
+    // RDD-backed tiles: a local Seq would fold into the plan
+    val tiles = spark.createDataset(sc.parallelize(TiledStencil.tile3(volume(1), dims, ts), 3))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def withJobs[T](body: => T): (T, Int) = {
+      org.apache.spark.ListenerBusDrain(sc)
+      jobs.set(0)
+      val out = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (out, jobs.get())
+    }
+    sc.addSparkListener(listener)
+    try {
+      val (routed, buildJobs) = withJobs(Graft.labelVolume(tiles, ts, grid))
+      assert(buildJobs == 0, s"building the frame ran $buildJobs jobs")
+      val (_, routedJobs) = withJobs(routed.write.format("noop").mode("overwrite").save())
+      assert(routedJobs >= 1 && routedJobs <= 2, s"routed call ran $routedJobs jobs")
+      val (_, distJobs) = withJobs(DistributedLabel.apply3(tiles, ts, grid)
+        .write.format("noop").mode("overwrite").save())
+      assert(distJobs > 2, s"distributed call ran $distJobs jobs")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("tiles that are not one complete volume throw on the routed path") {
+    val whole = TiledStencil.tile3(volume(1), dims, ts)
+    def failure(tiles: Seq[Tile3]): String =
+      intercept[Exception](Graft.labelVolume(tiles.toDS(), ts, grid).collect()).getMessage
+    assert(failure(whole.tail).contains("1 of the 6 grid tiles are missing"))
+    assert(failure(whole :+ whole.head).contains("appears twice"))
+    assert(failure(whole.map(t => if (t.ti == 1) t.copy(id = 7L) else t)).contains("2 volume ids"))
+    assert(failure(whole.map(t => if (t.tj == 2) t.copy(tj = 3) else t)).contains("outside"))
+    assert(failure(whole.map(t => t.copy(data = t.data.take(10)))).contains("holds 10 cells"))
+    val img = TiledStencil.tile(new Array[Boolean](32 * 32), 32, 32, 16)
+    val e = intercept[Exception](Graft.labelImage(img.tail.toDS(), 16, 2, 2).collect())
+    assert(e.getMessage.contains("1 of the 4 grid tiles are missing"))
+  }
+
+  test("label and triangle results leave the CacheManager empty") {
+    // other suites' cached frames would mask a leak: start from an empty
+    // cache (dropping them only makes their later reads recompute)
+    spark.catalog.clearCache()
+    val cache = spark.sharedState.cacheManager
+    val rng = new scala.util.Random(3)
+    val mask = Array.fill(32 * 32)(rng.nextInt(3) > 0)
+    val tiles2 = TiledStencil.tile(mask, 32, 32, 16).toDS()
+    val tiles3 = TiledStencil.tile3(volume(2), dims, ts).toDS()
+    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L)).toDF("src", "dst")
+    val results = (1 to 3).flatMap { _ =>
+      Seq(DistributedLabel(tiles2, 16, 2, 2, connectivity = 2),
+        DistributedLabel.apply3(tiles3, ts, grid, connectivity = 2),
+        graft.operators.TriangleCount(edges, "src", "dst"),
+        Graft.labelVolume(tiles3, ts, grid), Graft.labelImage(tiles2, 16, 2, 2))
+    }
+    results.foreach(_.count())
+    assert(cache.isEmpty, "a label or triangle result is still registered in the CacheManager")
   }
 }
 
